@@ -51,46 +51,51 @@ def crawl_digest(results: list[dict], counters: dict[tuple[int, str], int],
     }
 
 
-def engine_digest(res) -> dict[str, str]:
-    """Digest of a ``CrawlResult`` (collects its three outputs)."""
+def engine_outputs(res) -> tuple[list[dict], dict[tuple[int, str], int], set[str]]:
+    """Results, per-(round, metric) counter totals and seen set of a
+    ``CrawlResult`` (collects its three outputs)."""
     results = [r.asDict() for r in res.results.collect()] if res.results is not None else []
     counters: dict[tuple[int, str], int] = {}
     for r in (res.counters.collect() if res.counters is not None else []):
         k = (int(r.gen), r.metric)
         counters[k] = counters.get(k, 0) + int(r.n)
     seen = {r.url_canon for r in res.seen.collect()} if res.seen is not None else set()
-    return crawl_digest(results, counters, seen)
+    return results, counters, seen
 
 
-class _LazyPage:
-    """Page mapping for the oracle that builds html only when fetched."""
+class _ParquetPage:
+    """Page mapping for the oracle over a written pages table: html is
+    read from the Arrow column only when fetched."""
 
-    __slots__ = ("web", "i", "url")
+    __slots__ = ("html", "i", "url")
 
-    def __init__(self, web: Web, i: int, url: str):
-        self.web, self.i, self.url = web, i, url
+    def __init__(self, html, i: int, url: str):
+        self.html, self.i, self.url = html, i, url
 
     def __getitem__(self, key):
         if key == "url":
             return self.url
         if key == "html":
-            return self.web.page(self.i)[1].encode()
+            return self.html[self.i].as_py()
         raise KeyError(key)
 
 
-def oracle_digest(web: Web, *, budget_per_host: int, max_rounds: int,
-                  robots: bool, cache_path: str | None = None) -> dict[str, str]:
-    """Digest of the single-process oracle crawl, cached on disk."""
+def oracle_digest(web: Web, *, pages_path: str, budget_per_host: int,
+                  max_rounds: int, robots: bool,
+                  cache_path: str | None = None) -> dict[str, str]:
+    """Digest of the single-process oracle crawl over the pages table
+    written at ``pages_path``, cached on disk."""
     if cache_path and os.path.exists(cache_path):
         with open(cache_path) as f:
             return json.load(f)
     from siren_spark.testing.oracle import simulate_crawl
 
-    pages = []
-    for i in range(web.n_ids):
-        url = web.page_url(i)
-        if url is not None:
-            pages.append(_LazyPage(web, i, url))
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(pages_path, columns=["url", "html"])
+    html = table.column("html")
+    pages = [_ParquetPage(html, i, u)
+             for i, u in enumerate(table.column("url").to_pylist())]
     seeds = [{"url": u, "meta": {"keyword": "crisis"}} for u, _s in web.seed_urls()]
     sim = simulate_crawl(pages, seeds, budget_per_host=budget_per_host,
                          max_rounds=max_rounds,

@@ -5,11 +5,13 @@ per-layer metric the end-to-end metric (and workload) it should move.
 keeps the two in step.
 
 End-to-end metrics keep workload-neutral names (an *item* is a URL,
-scheduled or extracted): ``items_per_s`` is urls_per_s and
-``cpu_s_per_kitem`` is cpu_s_per_kurl. Round and crawl wall times
-(round_s_p50, crawl_s) moved with this host's steal by up to 0.22 of
-their median over ten runs, so they are per-layer metrics without a
-bound.
+fetched or extracted): ``items_per_s`` is urls_per_s and
+``cpu_s_per_kitem`` is cpu_s_per_kurl. Both are measured from outside:
+rounds are delimited by the times the checkpoint commits returned, and
+items are counted from the counters the oracle check has verified.
+Round and crawl wall times (round_s_p50, crawl_s) moved with host steal
+by up to 0.22 of their median over ten runs on a shared 4-core VM, so
+they are per-layer metrics without a bound.
 """
 
 from __future__ import annotations
@@ -21,15 +23,17 @@ NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9_.-]{0,63}$")
 # name, unit, better, bound, description
 END_TO_END = [
     ("items_per_s", "1/s", "higher", 0.24,
-     "(scheduled + extracted) URLs per second over rounds >= 1"),
-    ("cpu_s_per_kitem", "s", "lower", 0.2,
+     "(fetched + extracted) items of rounds >= 1, from the checked counters, "
+     "per second from round 0's commit to the return of run_crawl"),
+    ("cpu_s_per_kitem", "s", "lower", 0.24,
      "CPU of the whole process tree (driver, JVM, Python workers) in the "
      "timed window per 1000 items"),
-    ("peak_rss_mb", "MB", "lower", 0.2,
+    ("peak_rss_mb", "MB", "lower", 0.24,
      "peak resident memory of the process tree in the timed window, "
-     "sampled every 0.25 s"),
+     "sampled every 0.25 s (the driver heap grows on demand up to 2 GB)"),
     ("setup_s", "s", "lower", 0.25,
-     "median of three set-ups: fresh Spark session, input load, warm-up"),
+     "process start to the timed window, less input generation: JVM and "
+     "Spark start, input load, warm-up scan and first Python-UDF job"),
 ]
 
 CRAWL_TABLES = ("frontier_ann", "extracted", "results", "counters", "bloom",
@@ -51,7 +55,7 @@ def _per_layer() -> list[tuple[str, str, str, str]]:
     out = [
         ("crawl.rounds", "count", "lower", "context for every crawl metric"),
         ("crawl.round_s_p50", "s", "lower",
-         "median round wall time; moves with items_per_s"),
+         "median round wall time between commits; moves with items_per_s"),
         ("crawl.crawl_s", "s", "lower",
          "median run_crawl wall time; moves with items_per_s"),
         ("crawl.driver_gap_s", "s", "lower",
@@ -127,9 +131,11 @@ def benchmark_json() -> dict:
 RUN_SECONDS = 20
 WORKLOADS = [
     ("crawl_bulk",
-     "throughput crawl, unthrottled budget and no robots: fetch, decode, the "
-     "Arrow crossing and the site kernels carry the URL volume"),
+     "throughput crawl (no budget, no robots, bucketed fetch join), ~9k items a "
+     "round: fetch+extract spans ~1/3 of a round, annotate and derived writes "
+     "the rest"),
     ("crawl_polite",
-     "budget 50 binds on all 25 domains (30% on one hot host), with robots: "
-     "the growing deferred backlog makes annotate and fixed round costs dominate"),
+     "budget 50 binds on most of 20 domains, robots on all: the deferred backlog "
+     "is annotated again each round; annotate spans ~40% of a round, "
+     "fetch+extract ~25%"),
 ]

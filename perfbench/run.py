@@ -4,12 +4,12 @@
 
 Run from the root of a checkout. Inputs are generated from ``--seed``
 and cached under ``.bench_cache/``; the program receives only the
-generated tables. One run: start Spark, generate (or reuse) the inputs,
-set up three times (fresh Spark session, input load, warm-up), run at
-least two crawls and until ``--seconds`` have passed, check every
-output against the oracle crawl, and print the metrics. The last stdout
-line is one JSON object; with ``--trace 0`` it carries the end-to-end
-metrics, with ``--trace 1`` the per-layer ones.
+generated tables. One run: generate (or reuse) the inputs, set up
+(start Spark, load the inputs, warm up), run at least two crawls and
+until ``--seconds`` have passed, check every output against the oracle
+crawl, and print the metrics. The last stdout line is one JSON object;
+with ``--trace 0`` it carries the end-to-end metrics, with ``--trace 1``
+the per-layer ones.
 Workloads and metrics are described in ``perfbench/README.md``.
 """
 
@@ -20,8 +20,8 @@ import json
 import os
 import shutil
 import statistics
+import subprocess
 import sys
-import threading
 import time
 
 T_PROCESS = time.time()
@@ -29,7 +29,6 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 CACHE = os.path.join(ROOT, ".bench_cache")
 MASTER = "local[4]"
-SETUP_REPS = 3
 DRIVER_MEM = "2g"
 
 
@@ -54,13 +53,15 @@ def _environment() -> None:
 def _session(app: str):
     from siren_spark.session import get_spark
 
+    # The heap grows on demand up to DRIVER_MEM, so peak RSS sees it.
     # C1 only: in runs this short, C2 compiling in the background moved
     # crawl times by about 10 % from run to run and doubled the text-ops
-    # CPU. A pre-touched heap keeps the JVM's resident size independent
-    # of GC timing. No perf-data file: it would land in /tmp.
+    # CPU. C1 alone gets a 48 MB code cache, which fills in a traced run
+    # and then stops all compiling. No perf-data file: it would land in
+    # /tmp.
     java_opts = [f"-Djava.io.tmpdir={os.path.join(CACHE, 'tmp')}",
-                 f"-Xms{DRIVER_MEM}", "-XX:+AlwaysPreTouch",
-                 "-XX:TieredStopAtLevel=1", "-XX:-UsePerfData"]
+                 "-XX:TieredStopAtLevel=1", "-XX:ReservedCodeCacheSize=256m",
+                 "-XX:-UsePerfData"]
     spark = get_spark(MASTER, app_name=app, shuffle_partitions=4, extra_conf={
         "spark.ui.showConsoleProgress": "false",
         "spark.local.dir": os.path.join(CACHE, "spark-local"),
@@ -127,14 +128,56 @@ class CrawlWorkload:
         self.crawls: list[dict] = []
 
     # -- inputs --------------------------------------------------------------
-    def prepare(self) -> None:
-        """Spark-free work, run while the JVM starts: raw pages, seeds
-        and robots as parquet, and the oracle crawl's digest."""
+    def generated(self) -> bool:
+        return os.path.exists(os.path.join(self.dir, "done.json"))
+
+    def generate(self) -> None:
+        """One-time input generation, cached on disk: pages, seeds and
+        robots as parquet, and the oracle crawl's digest. For the
+        bucketed store the raw pages are ingested into the bucketed
+        table by a child process with a Spark of its own (started while
+        the pages are written), so that set-up in the measuring process
+        starts from a cold JVM whether the inputs were cached or not."""
+        if self.generated():
+            self._oracle()    # cached digest
+            return
+        shutil.rmtree(self.dir, ignore_errors=True)
+        os.makedirs(self.dir)
+        child = None
+        if self.bucketed:
+            child = subprocess.Popen(
+                [sys.executable, "-c", "import sys; from perfbench.run import "
+                 "ingest_child; sys.exit(ingest_child(sys.argv[1], int(sys.argv[2])))",
+                 self.name, str(self.seed)],
+                cwd=ROOT, stdin=subprocess.PIPE, text=True)
+        try:
+            self._write_raw()
+            if child is not None:
+                child.stdin.write("go\n")
+                child.stdin.flush()
+            self._oracle()
+        finally:
+            if child is not None:
+                child.stdin.close()    # without "go": the child stops
+                rc = child.wait()
+        if child is not None:
+            if rc != 0:
+                raise RuntimeError(f"bucketed ingest exited with {rc}")
+            os.remove(self._pages_path())
+        with open(os.path.join(self.dir, "done.json"), "w") as f:
+            json.dump({"params": self.params.__dict__, "seed": self.seed,
+                       "pages": self.web.n_pages()}, f)
+
+    def _pages_path(self) -> str:
+        return os.path.join(
+            self.dir, "raw_pages.parquet" if self.bucketed else "pages.parquet")
+
+    def _oracle(self) -> None:
         from perfbench.checks import oracle_digest
 
-        self._write_raw()
         self.want = oracle_digest(
-            self.web, budget_per_host=self.cfg.budget_per_host,
+            self.web, pages_path=self._pages_path(),
+            budget_per_host=self.cfg.budget_per_host,
             max_rounds=self.cfg.max_rounds, robots=self.params.robots,
             cache_path=os.path.join(
                 self.dir, f"oracle-b{self.cfg.budget_per_host}-r{self.cfg.max_rounds}.json"))
@@ -145,12 +188,7 @@ class CrawlWorkload:
 
         from perfbench.webgen import write_pages
 
-        if os.path.exists(os.path.join(self.dir, "done.json")):
-            return
-        shutil.rmtree(self.dir, ignore_errors=True)
-        os.makedirs(self.dir)
-        write_pages(self.web, os.path.join(
-            self.dir, "raw_pages.parquet" if self.bucketed else "pages.parquet"))
+        write_pages(self.web, self._pages_path())
         seeds = self.web.seed_urls()
         pq.write_table(pa.table({
             "url": [u for u, _s in seeds],
@@ -164,28 +202,16 @@ class CrawlWorkload:
             pq.write_table(pa.table({"domain": [r["domain"] for r in rows],
                                      "rules": [r["rules"] for r in rows]}),
                            os.path.join(self.dir, "robots.parquet"))
-        if not self.bucketed:
-            self._mark_done()
 
-    def _mark_done(self) -> None:
-        with open(os.path.join(self.dir, "done.json"), "w") as f:
-            json.dump({"params": self.params.__dict__, "seed": self.seed,
-                       "pages": self.web.n_pages()}, f)
-
-    def generate(self, spark) -> None:
-        """Ingest the raw pages into the bucketed pages table."""
-        if os.path.exists(os.path.join(self.dir, "done.json")):
-            return
+    def ingest(self, spark) -> None:
+        """Write the raw pages into the bucketed pages table."""
         from siren_spark.sources.pages import BucketedParquetPageStore
 
-        raw = os.path.join(self.dir, "raw_pages.parquet")
         BucketedParquetPageStore(self.table, buckets=self.fetch_buckets,
                                  path=os.path.join(self.dir, "pages")).write(
-            spark.read.parquet(raw))
-        os.remove(raw)
-        self._mark_done()
+            spark.read.parquet(self._pages_path()))
 
-    def load(self, spark, rep: int) -> None:
+    def load(self, spark) -> None:
         from pyspark.sql import functions as F
 
         from siren_spark.functions.udfs import canonicalize_udf
@@ -194,10 +220,8 @@ class CrawlWorkload:
         )
 
         if self.bucketed:
-            # a new catalog name per set-up, so each one registers the
-            # bucketed table from its on-disk spec again
             self.pages = BucketedParquetPageStore(
-                f"{self.table}_s{rep}", buckets=self.fetch_buckets,
+                self.table, buckets=self.fetch_buckets,
                 path=os.path.join(self.dir, "pages")).read(spark)
         else:
             self.pages = ParquetPageStore(
@@ -213,7 +237,7 @@ class CrawlWorkload:
             .write.format("noop").mode("overwrite").save()
 
     # -- timed window ----------------------------------------------------------
-    def measure(self, spark, seconds: float, tracer) -> None:
+    def measure(self, spark, seconds: float, clock, tracer) -> None:
         from siren_spark.crawl import run_crawl
 
         t_window = time.time()
@@ -222,6 +246,7 @@ class CrawlWorkload:
             ck = os.path.join(CACHE, f"ckpt-{os.getpid()}-{len(self.crawls)}")
             shutil.rmtree(ck, ignore_errors=True)
             n_spans = len(tracer.spans) if tracer else 0
+            n_commits = len(clock.ends)
             t0 = time.time()
             rec = {"ckpt": ck, "start": t0, "error": None}
             try:
@@ -230,6 +255,7 @@ class CrawlWorkload:
             except Exception as e:   # noqa: BLE001 — counted in error_rate
                 rec["error"] = f"{type(e).__name__}: {str(e)[:200]}"
             rec["end"] = time.time()
+            rec["commits"] = clock.ends[n_commits:]
             if tracer:
                 tracer.collect_stage_metrics(final=True)
             rec["spans"] = tracer.spans[n_spans:] if tracer else []
@@ -237,7 +263,9 @@ class CrawlWorkload:
 
     # -- checks ----------------------------------------------------------------
     def check(self, spark) -> list[str]:
-        from perfbench.checks import digest_mismatches, engine_digest
+        from perfbench.checks import (
+            crawl_digest, digest_mismatches, engine_outputs,
+        )
 
         problems = []
         for i, rec in enumerate(self.crawls):
@@ -245,7 +273,14 @@ class CrawlWorkload:
                 problems.append(f"crawl {i} raised {rec['error']}")
                 rec["ok"] = False
                 continue
-            bad = digest_mismatches(engine_digest(rec["res"]), self.want)
+            results, counters, seen = engine_outputs(rec["res"])
+            bad = digest_mismatches(crawl_digest(results, counters, seen), self.want)
+            if any(g >= len(rec["commits"]) for g, _m in counters):
+                bad.append("round commits")
+            # items per round from the checked counters: URLs fetched
+            # (= scheduled) plus records extracted
+            rec["items"] = [counters.get((g, "fetched"), 0) + counters.get((g, "records"), 0)
+                            for g in range(len(rec["commits"]))]
             rec["ok"] = not bad
             if bad:
                 problems.append(f"crawl {i}: {', '.join(bad)} differ from the oracle")
@@ -259,29 +294,42 @@ class CrawlWorkload:
     def counts(self) -> tuple[int, int]:
         return len(self.crawls), sum(1 for r in self.crawls if not r.get("ok"))
 
+    def _checked(self) -> list[dict]:
+        return [r for r in self.crawls if r.get("ok")]
+
+    @staticmethod
+    def round_walls(rec: dict) -> list[float]:
+        """Round wall times, delimited from outside by the commits."""
+        edges = [rec["start"]] + rec["commits"]
+        return [b - a for a, b in zip(edges, edges[1:])]
+
     def end_to_end(self, cpu_s: float) -> dict[str, float]:
-        good = [r for r in self.crawls if r.get("res") is not None]
-        steady_urls = sum(sum(r["res"].round_urls[1:]) for r in good)
-        steady_s = sum(sum(r["res"].round_secs[1:]) for r in good)
-        all_urls = self.items()
+        """Rounds are delimited by the times the commits returned and
+        items are counted from the checked counters: nothing here
+        relies on the program's own timers. The steady window runs
+        from round 0's commit to the return of ``run_crawl``."""
+        good = self._checked()
+        steady_items = sum(sum(r["items"][1:]) for r in good)
+        steady_s = sum(r["end"] - r["commits"][0] for r in good if r["commits"])
+        all_items = self.items()
         return {
-            "items_per_s": steady_urls / steady_s if steady_s else 0.0,
-            "cpu_s_per_kitem": cpu_s / (all_urls / 1000) if all_urls else 0.0,
+            "items_per_s": steady_items / steady_s if steady_s else 0.0,
+            "cpu_s_per_kitem": cpu_s / (all_items / 1000) if all_items else 0.0,
             # printed in the readable block; per-layer metrics in traces
-            "round_s_p50": _median([s for r in good for s in r["res"].round_secs]),
+            "round_s_p50": _median([w for r in good for w in self.round_walls(r)]),
             "crawl_s": _median([r["end"] - r["start"] for r in good]),
         }
 
     def items(self) -> int:
-        return sum(sum(r["res"].round_urls) for r in self.crawls if r.get("res"))
+        return sum(sum(r["items"]) for r in self._checked())
 
     def per_layer(self, tracer) -> dict[str, float]:
         from perfbench.metrics import CRAWL_TABLES, PHASE_FIELDS, PHASES
         from perfbench.trace import round_accounting
 
         out: dict[str, float] = {}
-        good = [r for r in self.crawls if r.get("res") is not None]
-        n_rounds = sum(r["res"].rounds for r in good) or 1
+        good = self._checked()
+        n_rounds = sum(len(r["commits"]) for r in good) or 1
         gaps, sched, annotated = [], 0, 0
         for r in good:
             gaps += [row["gap"] for row in round_accounting(r["spans"], r["start"])]
@@ -292,7 +340,7 @@ class CrawlWorkload:
                     annotated += sum(by.values())
         out["crawl.rounds"] = n_rounds / max(len(good), 1)
         out["crawl.round_s_p50"] = _median(
-            [s for r in good for s in r["res"].round_secs])
+            [w for r in good for w in self.round_walls(r)])
         out["crawl.crawl_s"] = _median([r["end"] - r["start"] for r in good])
         out["crawl.driver_gap_s"] = sum(gaps) / n_rounds
         out["crawl.sched_ratio"] = sched / annotated if annotated else 0.0
@@ -323,6 +371,23 @@ class CrawlWorkload:
 SMALL_BOX = {"salt_buckets": 4, "bloom_buckets": 4}
 
 
+def ingest_child(name: str, seed: int) -> int:
+    """Child process of ``CrawlWorkload.generate``: starts Spark, waits
+    for "go" on stdin (the raw pages are written), ingests them into the
+    bucketed table and stops Spark."""
+    from perfbench.trace import ProcTree
+
+    _environment()
+    spark = _session(f"perfbench_ingest_{name}")
+    try:
+        if sys.stdin.readline().strip() != "go":
+            return 1
+        make_workload(name, seed).ingest(spark)
+    finally:
+        _shutdown(spark, ProcTree())
+    return 0
+
+
 def make_workload(name: str, seed: int):
     from perfbench.webgen import WebParams
 
@@ -336,10 +401,10 @@ def make_workload(name: str, seed: int):
             }, seed, bucketed=True, textops_layer=True)
     if name == "crawl_polite":
         return CrawlWorkload(
-            name, WebParams(n_index=200, links=20, waves=2, n_domains=25,
+            name, WebParams(n_index=200, links=20, waves=2, n_domains=20,
                             phantom=True, robots=True), {
-                # the reference budget (config.toml:10) binds on every
-                # domain in every round, so the deferred backlog grows;
+                # the reference budget (config.toml:10) binds on most
+                # domains in every round, so the deferred backlog grows;
                 # compaction every 2 rounds so seen and headline
                 # compaction fire in round 2
                 "budget_per_host": 50, "max_rounds": 3,
@@ -368,55 +433,39 @@ def main(argv: list[str] | None = None) -> int:
     _environment()
 
     from perfbench.metrics import END_TO_END, PER_LAYER
-    from perfbench.trace import ProcTree, Tracer, host_jiffies, steal_pct
+    from perfbench.trace import (
+        CommitClock, ProcTree, Tracer, host_jiffies, steal_pct,
+    )
 
     proc = ProcTree()
     wl = make_workload(args.workload, args.seed)
-    # the Spark-free part of input generation overlaps the JVM start
-    cached = os.path.exists(os.path.join(wl.dir, "done.json"))
-    prep_s: list[float] = []
-    prep_err: list[BaseException] = []
-
-    def prepare():
-        t0 = time.time()
-        try:
-            wl.prepare()
-        except BaseException as e:   # noqa: BLE001 — re-raised below
-            prep_err.append(e)
-        prep_s.append(time.time() - t0)
-    prep = threading.Thread(target=prepare, name="perfbench-gen")
-    prep.start()
-    spark = _session(f"perfbench_{args.workload}")
-    prep.join()
-    if prep_err:
-        raise prep_err[0]
+    # one-time input generation is kept off the set-up clock
+    cached = wl.generated()
     t0 = time.time()
-    wl.generate(spark)
-    gen_s = prep_s[0] + time.time() - t0
+    wl.generate()
+    gen_s = time.time() - t0
 
-    # set-up, repeated: a fresh session on the running context (a second
-    # SparkContext in one process leaves PySpark's accumulator server
-    # behind), the inputs registered and read again, and the warm-up
-    setups = []
-    for rep in range(SETUP_REPS):
-        t0 = time.time()
-        spark = spark.newSession()
-        wl.load(spark, rep)
-        setups.append(time.time() - t0)
+    # set-up: process start to the timed window, less input generation
+    spark = _session(f"perfbench_{args.workload}")
+    wl.load(spark)
 
+    clock = CommitClock()
+    clock.install()
     tracer = Tracer(spark.sparkContext) if args.trace else None
     if tracer:
         tracer.install()
 
     t_window = time.time()
+    setup_s = t_window - T_PROCESS - gen_s
     proc.start_sampling()
     cpu0, jiff0 = proc.cpu(), host_jiffies()
-    wl.measure(spark, args.seconds, tracer)
+    wl.measure(spark, args.seconds, clock, tracer)
     cpu1, jiff1 = proc.cpu(), host_jiffies()
     proc.stop_sampling()
     window_s = time.time() - t_window
     if tracer:
         tracer.uninstall()
+    clock.uninstall()
 
     t_check = time.time()
     problems = wl.check(spark)
@@ -441,7 +490,7 @@ def main(argv: list[str] | None = None) -> int:
     wl.cleanup()
     _shutdown(spark, proc)
     e2e["peak_rss_mb"] = proc.peak_rss / 2**20
-    e2e["setup_s"] = _median(setups)
+    e2e["setup_s"] = setup_s
 
     if args.trace:
         metrics = {n: {"value": float(layer.get(n, 0.0)), "unit": u}
@@ -457,12 +506,12 @@ def main(argv: list[str] | None = None) -> int:
         print(f"  {alias.get(n, n):<18} {e2e[n]:>12.4f} {u:<5} ({n})")
     for n in ("round_s_p50", "crawl_s"):
         print(f"  {n:<18} {e2e[n]:>12.4f} s")
+    print(f"  {'crawls':<18} " + " ".join(
+        f"{r['end'] - r['start']:.2f}s" for r in wl.crawls))
     print(f"  {'error_rate':<18} {failed / max(attempted, 1):>12.4f} ratio "
           f"({failed}/{attempted})")
     print(f"  {'bench.gen_s':<18} {gen_s:>12.4f} s     "
-          f"({'cached inputs' if cached else 'generated, overlapping JVM start'})")
-    print(f"  {'bench.window_open_s':<18} {t_window - T_PROCESS:>12.4f} s     "
-          "(process start to timed window)")
+          f"({'cached inputs' if cached else 'inputs generated'})")
     print(f"  {'bench.check_s':<18} {check_s:>12.4f} s     (output checks)")
     print(f"  {'bench.run_s':<18} {time.time() - T_PROCESS:>12.4f} s     (whole run)")
     for p in problems:

@@ -16,7 +16,7 @@ from perfbench import metrics
 from perfbench.checks import crawl_digest, oracle_digest
 from perfbench.tablegen import write_tables
 from perfbench.trace import Span, round_accounting
-from perfbench.webgen import Web, WebParams
+from perfbench.webgen import Web, WebParams, write_pages
 
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SMALL = WebParams(n_index=12, links=6, waves=2, n_domains=5, phantom=True,
@@ -38,6 +38,20 @@ def _web_bytes(web: Web) -> tuple[str, list[str]]:
 
 def test_same_seed_gives_identical_web():
     assert _web_bytes(Web(SMALL, 3)) == _web_bytes(Web(SMALL, 3))
+
+
+def test_pages_come_from_benchgen_builders():
+    from siren_spark.testing import benchgen
+
+    web = Web(SMALL, 3)
+    p = SMALL
+    assert web.page(0) == benchgen.index_page(
+        web.base, p.links, p.n_domains, n_index=web.base + p.n_index,
+        wave_size=web.wave_size)
+    aid = next(a for a in range(web.n_articles) if not web.withheld(a))
+    url, html, _text = benchgen.article_page(web.base * p.links + aid, p.links,
+                                             p.n_domains)
+    assert web.page(p.n_index + aid) == (url, html)
 
 
 def test_other_seed_changes_urls_not_row_counts():
@@ -103,6 +117,28 @@ def test_round_spans_and_gap_account_for_wall():
     assert rows[0]["gap"] == pytest.approx(0.7)
 
 
+def test_commit_clock_times_each_commit_and_uninstalls(tmp_path):
+    import time
+
+    from siren_spark.operators.checkpoint import CheckpointStore
+
+    from perfbench.trace import CommitClock
+
+    orig = CheckpointStore.write_round
+    clock = CommitClock()
+    clock.install()
+    try:
+        store = CheckpointStore(str(tmp_path))
+        t0 = time.time()
+        for gen in range(3):
+            store.write_round(gen, {}, stats={"by_status": {}}, staged={})
+    finally:
+        clock.uninstall()
+    assert CheckpointStore.write_round is orig
+    assert len(clock.ends) == 3 and clock.ends == sorted(clock.ends)
+    assert t0 <= clock.ends[0] and store.latest_gen() == 2
+
+
 class _Frame:
     def __init__(self, rows):
         self.rows = rows
@@ -125,15 +161,14 @@ def test_corrupt_output_is_counted_in_error_rate(tmp_path, monkeypatch):
     from siren_spark.testing.oracle import simulate_crawl
 
     from perfbench import run
-    from perfbench.checks import _LazyPage
 
     monkeypatch.setattr(run, "CACHE", str(tmp_path))
     wl = run.CrawlWorkload("crawl_test", SMALL, {"budget_per_host": 4,
                                                   "max_rounds": 6}, 3,
                           bucketed=False)
     web = wl.web
-    pages = [_LazyPage(web, i, web.page_url(i)) for i in range(web.n_ids)
-             if web.page_url(i) is not None]
+    pages = [{"url": pg[0], "html": pg[1].encode()}
+             for pg in map(web.page, range(web.n_ids)) if pg is not None]
     seeds = [{"url": u, "meta": {"keyword": "crisis"}} for u, _s in web.seed_urls()]
     sim = simulate_crawl(pages, seeds, budget_per_host=4, max_rounds=6,
                          robots_rows=web.robots_rows())
@@ -149,15 +184,31 @@ def test_corrupt_output_is_counted_in_error_rate(tmp_path, monkeypatch):
     corrupt = bad.results.rows[0].asDict()
     corrupt["text"] = corrupt["text"] + " "
     bad.results.rows[0] = Row(**corrupt)
-    wl.crawls = [{"res": good, "error": None, "ckpt": str(tmp_path / "c0")},
-                 {"res": bad, "error": None, "ckpt": str(tmp_path / "c1")},
+    # one commit per round, 2 s apart; the program's own timers are absent
+    n_rounds = 1 + max(g for g, _m in counters)
+    commits = [10.0 + 2 * g for g in range(n_rounds)]
+    wl.crawls = [{"res": good, "error": None, "ckpt": str(tmp_path / "c0"),
+                  "start": 9.0, "end": commits[-1] + 1, "commits": commits},
+                 {"res": bad, "error": None, "ckpt": str(tmp_path / "c1"),
+                  "start": 9.0, "end": commits[-1] + 1, "commits": commits},
                  {"res": None, "error": "RuntimeError: boom", "ckpt": str(tmp_path / "c2")}]
-    wl.prepare()
+    wl.generate()
     problems = wl.check(None)
     attempted, failed = wl.counts()
     assert (attempted, failed) == (3, 2)
     assert any("results" in p for p in problems)
     assert any("boom" in p for p in problems)
+
+    # throughput counts only the checked crawl: fetched + records of
+    # rounds >= 1, over round 0's commit to the crawl's end
+    def items(g):
+        return counters.get((g, "fetched"), 0) + counters.get((g, "records"), 0)
+    e2e = wl.end_to_end(cpu_s=3.0)
+    steady = sum(items(g) for g in range(1, n_rounds))
+    assert e2e["items_per_s"] == pytest.approx(steady / (commits[-1] + 1 - commits[0]))
+    assert e2e["cpu_s_per_kitem"] == pytest.approx(
+        3.0 / (sum(items(g) for g in range(n_rounds)) / 1000))
+    assert e2e["round_s_p50"] == pytest.approx(2.0 if n_rounds > 2 else 1.5)
 
 
 def test_digest_ignores_row_order_and_zero_counters():
@@ -171,9 +222,12 @@ def test_digest_ignores_row_order_and_zero_counters():
 
 def test_oracle_digest_is_cached(tmp_path):
     web = Web(SMALL, 3)
+    pages = str(tmp_path / "pages.parquet")
+    write_pages(web, pages)
     path = str(tmp_path / "o.json")
-    first = oracle_digest(web, budget_per_host=4, max_rounds=6, robots=True,
-                          cache_path=path)
+    first = oracle_digest(web, pages_path=pages, budget_per_host=4,
+                          max_rounds=6, robots=True, cache_path=path)
     assert os.path.exists(path)
-    assert oracle_digest(web, budget_per_host=4, max_rounds=6, robots=True,
-                         cache_path=path) == first
+    os.remove(pages)    # a cached digest needs no pages
+    assert oracle_digest(web, pages_path=pages, budget_per_host=4,
+                         max_rounds=6, robots=True, cache_path=path) == first

@@ -55,6 +55,34 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
+class CommitClock:
+    """The wall time at which each ``CheckpointStore.write_round`` call
+    returned, in call order. It delimits the crawl's rounds from
+    outside, in untraced runs too; installed before the ``Tracer``, so
+    the tracer's own bookkeeping after a commit is not inside it."""
+
+    def __init__(self):
+        self.ends: list[float] = []
+        self._orig = None
+
+    def install(self) -> None:
+        from siren_spark.operators.checkpoint import CheckpointStore
+
+        orig = self._orig = CheckpointStore.write_round
+        ends = self.ends
+
+        def write_round(store, *args, **kwargs):
+            out = orig(store, *args, **kwargs)
+            ends.append(time.time())
+            return out
+        CheckpointStore.write_round = write_round
+
+    def uninstall(self) -> None:
+        from siren_spark.operators.checkpoint import CheckpointStore
+
+        CheckpointStore.write_round = self._orig
+
+
 class Tracer:
     """Span store, wrappers and per-phase task metrics of one Spark
     context."""

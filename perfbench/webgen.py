@@ -1,19 +1,25 @@
 """Seeded synthetic webs for the crawl workloads.
 
-The page shapes follow ``siren_spark.testing.benchgen`` (mirror search
-pages with an absolute next-wave anchor, ~20 KB ld+json article pages,
-toi JSON search chains, an optional phantom article wave referenced only
-by the seed list). The seed changes the URLs (a per-seed slug and
-domain tag), which domain each search page lands on, and which article
-pages are withheld; it never changes the number of rows of any table.
+Every page is built by ``siren_spark.testing.benchgen``'s page builders
+(mirror search pages with an absolute next-wave anchor, ~20 KB ld+json
+article pages, toi JSON search chains), so the benchmark crawls the same
+web as ``bench.py`` and the repo's tests. An optional phantom article
+wave is referenced only by the seed list (full-volume round 0).
+
+The seed picks a block of the builders' id space: search page ``i`` of
+the web is the builders' page ``base + i`` with ``base`` a seeded
+multiple of ``n_index``. That moves every URL, the domain of every
+search page (the builders hash the id onto a domain, about 30 % onto
+the hot host ``site0``) and the toi chain numbers. The seed also picks
+which article pages are withheld (one per block of ``miss_every``).
+Row counts of every table are the same for every seed.
 
 Everything is a pure function of ``(WebParams, seed, row id)``, so two
-runs with the same seed write byte-identical tables at any parallelism.
+runs with the same seed write byte-identical tables.
 """
 
 from __future__ import annotations
 
-import functools
 import hashlib
 import json
 from dataclasses import asdict, dataclass
@@ -22,21 +28,13 @@ from datetime import datetime
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from siren_spark.testing.benchgen import _words, toi_page
+from siren_spark.testing import benchgen
 from siren_spark.urls import canonicalize_url
 
 TOI_DOMAIN = "toi-epaper.example"
-
-# ~20 KB article pages: constant nav cruft plus 35 paragraphs. Article
-# aid uses paragraphs aid+13 .. aid+47, so consecutive articles share
-# 34 of them; memoizing keeps generation off the benchmark's clock.
-_NAV = "".join(f'<li class="nav-item"><a href="/section/{j}">s{j}</a></li>'
-               for j in range(40))
-
-
-@functools.lru_cache(maxsize=4096)
-def _para(k: int) -> str:
-    return f'<p class="para">{_words(k, 60)}</p>'
+# seeded blocks of the builders' id space; large enough that two seeds
+# rarely share a block, small enough that ids stay short
+N_BLOCKS = 1 << 20
 
 
 @dataclass(frozen=True)
@@ -44,14 +42,13 @@ class WebParams:
     n_index: int            # mirror search pages
     links: int              # articles linked per search page
     waves: int              # search-page waves (crawl depth)
-    n_domains: int          # mirror domains
-    hot_pct: int = 30       # share of search pages on domain 0 (the hot host)
+    n_domains: int          # mirror domains; n_domains - 1 prime to 40503 (benchgen._dom) uses them all
     miss_every: int = 97    # one article page withheld per block of this many
     phantom: bool = False   # extra seed-only article wave (full-volume round 0)
     robots: bool = False    # generate a robots table covering every domain
 
     def key(self, seed: int) -> str:
-        blob = json.dumps({"params": asdict(self), "seed": seed, "v": 2},
+        blob = json.dumps({"params": asdict(self), "seed": seed, "v": 3},
                           sort_keys=True)
         return hashlib.sha1(blob.encode()).hexdigest()[:16]
 
@@ -66,38 +63,25 @@ def mix(seed: int, x: int) -> int:
 
 
 class Web:
-    """URLs and pages of one (params, seed)."""
+    """URLs and pages of one (params, seed). Row ids: search pages,
+    then articles, then toi pages, then phantom articles."""
 
     def __init__(self, p: WebParams, seed: int):
+        assert p.n_index % p.waves == 0, "waves must split n_index evenly"
         self.p = p
         self.seed = seed
-        self.tag = f"{mix(seed, -1) % 16 ** 4:04x}"
-        self.slug = f"story{self.tag}"
+        self.base = (1 + mix(seed, -1) % N_BLOCKS) * p.n_index
         self.n_articles = p.n_index * p.links
         self.wave_size = p.n_index // p.waves
         self.n_phantom = self.wave_size * p.links if p.phantom else 0
         self.toi_pages = max(self.wave_size // 4, 1)
         self.n_toi = p.waves * self.toi_pages
-        # seeded placement of search pages on domains with exact shares:
-        # the first hot_pct % of a seeded order go to the hot host, the
-        # rest round-robin over the other domains
-        order = sorted(range(p.n_index), key=lambda i: mix(seed, i))
-        n_hot = p.n_index * p.hot_pct // 100
-        self._domain_no = [0] * p.n_index
-        for rank, i in enumerate(order):
-            if rank >= n_hot:
-                self._domain_no[i] = 1 + (rank - n_hot) % (p.n_domains - 1)
+        # toi chain of wave w, as the builders number it from base
+        self.toi_wave0 = self.base // self.wave_size
 
     # -- identity ------------------------------------------------------
-    def domain_no(self, i: int) -> int:
-        # phantom articles (ids past the last search page) reuse the
-        # placement of the search page they would have hung off
-        return self._domain_no[i % self.p.n_index]
-
-    def domain(self, i: int) -> str:
-        return f"site{self.domain_no(i)}-{self.tag}.example"
-
     def withheld(self, aid: int) -> bool:
+        """Local article id ``aid`` is missing from the pages table."""
         m = self.p.miss_every
         block = aid // m
         # one page per full block, at a seeded offset: the withheld count
@@ -105,94 +89,54 @@ class Web:
         total = self.n_articles + self.n_phantom
         return block < total // m and aid % m == mix(self.seed, ~block) % m
 
+    def _aid(self, aid: int) -> int:
+        # local article ids (phantoms follow the articles) -> builder ids
+        return self.base * self.p.links + aid
+
     def index_url(self, i: int) -> str:
-        return (f"https://{self.domain(i)}/getsearchdata.cms?"
-                f"pagenumber={i}&query=crisis")
+        return benchgen.index_url(self.base + i, self.p.n_domains)
 
     def article_url(self, aid: int) -> str:
-        return f"https://{self.domain(aid // self.p.links)}/news/{self.slug}-{aid}"
+        return benchgen.article_url(self._aid(aid), self.p.links, self.p.n_domains)
 
     def toi_url(self, wave: int, page: int) -> str:
-        return (f"https://{TOI_DOMAIN}/api/search?"
-                f"edition=e{wave}x{self.tag}&page={page}")
+        return benchgen.toi_url(self.toi_wave0 + wave, page)
 
     # -- pages ---------------------------------------------------------
-    def article_page(self, aid: int) -> tuple[str, str]:
-        url = self.article_url(aid)
-        headline = _words(aid, 6, "crisis")
-        desc = _words(aid + 7, 40)
-        day = 1 + aid % 28
-        month = 10 + (aid // 28) % 3
-        ld = {
-            "url": url,
-            "datePublished": f"2022-{month:02d}-{day:02d}T10:00:00",
-            "dateModified": f"2022-{month:02d}-{day:02d}T12:00:00",
-            "headline": headline,
-            "description": desc,
-            "author": {"name": f"reporter-{aid % 97}"},
-            "thumbnailUrl": f"https://{self.domain(aid // self.p.links)}/img/{aid}.jpg",
-        }
-        paras = "".join(_para(aid + 13 + j) for j in range(35))
-        html = ('<html><head><script type="application/ld+json">'
-                + json.dumps(ld)
-                + f"</script></head><body><ul class='nav'>{_NAV}</ul>"
-                + f"<div class='m'>{paras}</div></body></html>")
-        return url, html
-
-    def index_page(self, i: int) -> tuple[str, str]:
-        L = self.p.links
-        anchors = "".join(f'<a href="/{self.slug}-{a}">x</a>'
-                          for a in range(i * L, (i + 1) * L))
-        # cross-page duplicate discoveries: every search page also links
-        # the next page's first three articles (absolute hrefs, so they
-        # resolve on the articles' own domain)
-        if i + 1 < self.p.n_index:
-            anchors += "".join(f'<a href="{self.article_url(a)}">x</a>'
-                               for a in range((i + 1) * L, (i + 1) * L + 3))
-        ws = self.wave_size
-        if self.p.waves > 1 and i + ws < self.p.n_index:
-            anchors += f'<a href="{self.index_url(i + ws)}">next</a>'
-            if i % ws == 0:
-                anchors += f'<a href="{self.toi_url(i // ws + 1, 1)}">toi</a>'
-        html = ('<html><body><div class="searchcontent">' + anchors
-                + '<div class="Pagination clearfix"><a href="/p2">2</a></div>'
-                + "</div></body></html>")
-        return self.index_url(i), html
-
     @property
     def n_ids(self) -> int:
         return self.p.n_index + self.n_articles + self.n_toi + self.n_phantom
 
+    def _locate(self, i: int) -> tuple[str, int, int]:
+        """(kind, a, b) of row id ``i``: ("index", i, 0),
+        ("article", aid, 0) or ("toi", wave, page)."""
+        p = self.p
+        if i < p.n_index:
+            return "index", i, 0
+        i -= p.n_index
+        if i < self.n_articles:
+            return "article", i, 0
+        i -= self.n_articles
+        if i < self.n_toi:
+            wave, page = divmod(i, self.toi_pages)
+            return "toi", wave, page + 1
+        return "article", self.n_articles + (i - self.n_toi), 0
+
     def page(self, i: int) -> tuple[str, str] | None:
         """(url, html) of row id ``i``; None when the page is withheld."""
         p = self.p
-        if i < p.n_index:
-            return self.index_page(i)
-        i -= p.n_index
-        if i < self.n_articles:
-            return None if self.withheld(i) else self.article_page(i)
-        i -= self.n_articles
-        if i < self.n_toi:
-            wave, page = divmod(i, self.toi_pages)
-            return (self.toi_url(wave, page + 1),
-                    toi_page(wave, page + 1, self.toi_pages))
-        aid = self.n_articles + (i - self.n_toi)
-        return None if self.withheld(aid) else self.article_page(aid)
-
-    def page_url(self, i: int) -> str | None:
-        """URL of row id ``i`` without building its html."""
-        p = self.p
-        if i < p.n_index:
-            return self.index_url(i)
-        i -= p.n_index
-        if i < self.n_articles:
-            return None if self.withheld(i) else self.article_url(i)
-        i -= self.n_articles
-        if i < self.n_toi:
-            wave, page = divmod(i, self.toi_pages)
-            return self.toi_url(wave, page + 1)
-        aid = self.n_articles + (i - self.n_toi)
-        return None if self.withheld(aid) else self.article_url(aid)
+        kind, a, b = self._locate(i)
+        if kind == "index":
+            return benchgen.index_page(
+                self.base + a, p.links, p.n_domains,
+                n_index=self.base + p.n_index, wave_size=self.wave_size)
+        if kind == "toi":
+            return (self.toi_url(a, b),
+                    benchgen.toi_page(self.toi_wave0 + a, b, self.toi_pages))
+        if self.withheld(a):
+            return None
+        url, html, _text = benchgen.article_page(self._aid(a), p.links, p.n_domains)
+        return url, html
 
     def n_pages(self) -> int:
         total = self.n_articles + self.n_phantom
@@ -207,8 +151,8 @@ class Web:
         return out
 
     def domains(self) -> list[str]:
-        doms = sorted({self.domain(i) for i in range(self.p.n_index)})
-        return doms + [TOI_DOMAIN]
+        """Every domain the builders can place a page on."""
+        return [f"site{d}.example" for d in range(self.p.n_domains)] + [TOI_DOMAIN]
 
     def robots_rows(self) -> list[dict]:
         """One rules row per domain. About one domain in ten disallows the
@@ -217,7 +161,7 @@ class Web:
         for d in self.domains():
             h = mix(self.seed, int(hashlib.md5(d.encode()).hexdigest()[:8], 16))
             if d != TOI_DOMAIN and h % 10 == 0:
-                rules = (f"User-agent: *\nDisallow: /news/{self.slug}-{1 + (h >> 8) % 9}\n"
+                rules = (f"User-agent: *\nDisallow: /news/story-{1 + (h >> 8) % 9}\n"
                          "Allow: /\n")
             else:
                 rules = "User-agent: *\nAllow: /\n"
